@@ -38,7 +38,7 @@ from data_quality_checker_spark.plans import duck
 from data_quality_checker_spark.plans.rules import RULE_NAMES, RuleConfig
 from data_quality_checker_spark.plans.scrub import scrub_expr
 from data_quality_checker_spark.plans.udfs import perplexity_udf
-from data_quality_checker_spark.plans.verdict import with_rule_flags, with_verdict
+from data_quality_checker_spark.plans.verdict import with_verdict
 
 
 def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
@@ -1247,7 +1247,7 @@ select claimed, detected, count(*) as n from l group by 1, 2
 
 def q_quality_verdict(spark, sf):
     docs = _t(spark, sf, "documents")
-    scored = with_verdict(with_rule_flags(docs))
+    scored = with_verdict(docs)
     return scored.select(
         "doc_id", "keep", F.size("fired_rules").alias("n_fired")
     )
@@ -4915,7 +4915,7 @@ def entry(spark: SparkSession) -> DataFrame:
     pages pipeline — plans/pipeline.py adds dedup/metrics/lineage)."""
     sf = "/root/testdata/sf0.001"
     docs = _t(spark, sf, "documents")
-    scored = with_verdict(with_rule_flags(docs))
+    scored = with_verdict(docs)
     return scored.select(
         "doc_id",
         "keep",

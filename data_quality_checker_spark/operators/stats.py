@@ -286,6 +286,8 @@ def psi(
     cb = {r["b"]: r["count"] for r in rows if r["side"] == 0}
     bb = {r["b"]: r["count"] for r in rows if r["side"] == 1}
     n_c, n_b = sum(cb.values()), sum(bb.values())
+    if not n_c or not n_b:  # one side empty after the NULL filter
+        return 0.0
     val = 0.0
     for b in range(bins):
         p = max(cb.get(b, 0) / n_c, eps)

@@ -30,11 +30,7 @@ from pyspark.sql import functions as F
 from data_quality_checker_spark.plans.rules import RULE_NAMES, RuleConfig
 from data_quality_checker_spark.plans.scrub import with_scrub
 from data_quality_checker_spark.plans.udfs import langid_udf, perplexity_udf
-from data_quality_checker_spark.plans.verdict import (
-    RULE_PREFIX,
-    with_rule_flags,
-    with_verdict,
-)
+from data_quality_checker_spark.plans.verdict import RULE_PREFIX, with_verdict
 from data_quality_checker_spark.sources.io import bucket_id, write_partitioned
 
 
@@ -120,6 +116,13 @@ class PipelineConfig:
 def score_pages(df: DataFrame, cfg: PipelineConfig | None = None) -> DataFrame:
     """The pure transformation: pages -> scored/scrubbed/verdict frame.
 
+    The rule_* flags, fired_rules and keep come from ONE with_verdict
+    call over one bound stats struct per document. With
+    ``langid_impl="udf"`` the UDF label (and, for a trained artifact,
+    the low-confidence reject) is computed first and handed to
+    with_verdict as the lang rule, so rule_lang and keep both follow
+    it.
+
     Column pruning note: nothing here touches `html`, so the parquet
     scan never reads the binary payload (verified in tests via the
     physical plan's ReadSchema)."""
@@ -176,7 +179,8 @@ def score_pages(df: DataFrame, cfg: PipelineConfig | None = None) -> DataFrame:
 
         out = with_c4_clean(out.withColumn("text_raw", F.col("text")))
         out = out.withColumn("text", F.col("text_c4")).drop("text_c4")
-    out = with_rule_flags(out, cfg.rules)
+    pre_cols = out.columns
+    lang_fires = None
     if cfg.langid_impl == "udf":
         if cfg.langid_model_path:
             from data_quality_checker_spark.plans.udfs import (
@@ -193,24 +197,15 @@ def score_pages(df: DataFrame, cfg: PipelineConfig | None = None) -> DataFrame:
             )
         else:
             out = out.withColumn("lang_detected", langid_udf("text"))
-        # keep verdict consistent with the UDF label
-        lang_fires = F.col("text").isNotNull() & ~F.col(
-            "lang_detected"
-        ).isin(*cfg.rules.allowed_langs)
+        # the lang rule (and so keep) follows the UDF label
+        lang_fires = ~F.col("lang_detected").isin(*cfg.rules.allowed_langs)
         if cfg.langid_model_path and cfg.langid_min_confidence > 0:
-            # low-confidence reject: fires only when the artifact
-            # actually carries confidence (NULL comparison -> false)
-            # coalesce: NULL confidence (wordlist artifact) must make
-            # this disjunct FALSE, not poison the rule flag to NULL
+            # low-confidence reject: a NULL confidence (wordlist
+            # artifact) makes this disjunct NULL, which the battery
+            # coalesces to false
             lang_fires = lang_fires | (
-                F.col("text").isNotNull()
-                & F.coalesce(
-                    F.col("lang_confidence")
-                    < F.lit(cfg.langid_min_confidence),
-                    F.lit(False),
-                )
+                F.col("lang_confidence") < F.lit(cfg.langid_min_confidence)
             )
-        out = out.withColumn(f"{RULE_PREFIX}lang", lang_fires)
     if cfg.with_perplexity:
         out = out.withColumn("perplexity", perplexity_udf("text"))
     if cfg.gopher_quality:
@@ -219,13 +214,14 @@ def score_pages(df: DataFrame, cfg: PipelineConfig | None = None) -> DataFrame:
         )
 
         out = with_gopher_signals(out)
-    # self-contained keep unless the langid-UDF branch overrode the
-    # rule_lang column above (the bound form recomputes lang from
-    # cfg.rules and would ignore the override) — see with_verdict
-    out = with_verdict(
-        out,
-        cfg.rules,
-        self_contained_keep=(cfg.langid_impl != "udf"),
+    out = with_verdict(out, cfg.rules, lang_fires=lang_fires)
+    # scored schema order: rule_* ahead of the opt-in langid /
+    # perplexity / gopher columns, fired_rules and keep after them
+    flags = [f"{RULE_PREFIX}{n}" for n in RULE_NAMES]
+    out = out.select(
+        *pre_cols,
+        *flags,
+        *[c for c in out.columns if c not in {*pre_cols, *flags}],
     )
     # the opt-in webtext stages gate keep WITHOUT entering the frozen
     # fired_rules contract (RULE_NAMES ordering is pinned three ways)

@@ -1,150 +1,117 @@
-"""Verdict assembly: rule flags -> fired_rules array -> keep boolean.
+"""Verdict assembly: one rule battery -> rule_* flags, fired_rules, keep.
 
-Per-rule boolean columns are retained (null-safe, coalesced to false)
-so the metrics stage can aggregate rule-level drop counts without
+with_verdict materializes rules.rule_stats once per document, derives
+the 12 rule_* flags from it (rules.rule_flags) and builds fired_rules
+and keep. Per-rule boolean columns are retained (never NULL) so the
+metrics stage can aggregate rule-level drop counts without
 re-evaluating rules (generalizes generate_report, dq_checker.py:33-45).
 """
 
 from __future__ import annotations
 
-from functools import lru_cache
+from functools import lru_cache, reduce
+from operator import or_
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from data_quality_checker_spark.functions.text import bind_once
 from data_quality_checker_spark.plans.rules import (
     RULE_NAMES,
     RuleConfig,
-    rule_exprs,
+    rule_flags,
+    rule_stats,
 )
 
 RULE_PREFIX = "rule_"
-
-
-@lru_cache(maxsize=32)
-def _battery_exprs(cfg: RuleConfig, text_col: str):
-    """Cached construction of the battery's Column dicts (round-7):
-    the expressions are a pure function of the frozen (cfg, text_col)
-    pair, but building them costs ~0.4 s of py4j round-trips per call
-    — billed to every with_rule_flags invocation (each timed pipeline
-    run, every verdict query). Column trees are plan-independent and
-    reusable across DataFrames/sessions within one JVM gateway.
-    Returns item tuples (hashable, immutable cache value); callers
-    rebuild dicts."""
-    from data_quality_checker_spark.functions import text as X
-    from data_quality_checker_spark.plans.rules import (
-        rule_exprs_from_stats,
-        stat_exprs_counts,
-        stat_exprs_ratios,
-    )
-
-    helpers = (
-        ("_lower", F.lower(F.col(text_col))),
-        ("_lines", X.lines(text_col)),
-    )
-    counts = stat_exprs_counts(
-        cfg, text_col, F.col("_lower"), F.col("_lines")
-    )
-    ratios = stat_exprs_ratios(cfg, text_col)
-    flags = tuple(
-        (f"{RULE_PREFIX}{name}", F.coalesce(expr, F.lit(False)))
-        for name, expr in rule_exprs_from_stats(cfg, text_col).items()
-    )
-    return helpers, tuple(counts.items()), tuple(ratios.items()), flags
-
-
-def with_rule_flags(
-    df: DataFrame, cfg: RuleConfig | None = None, text_col: str = "text"
-) -> DataFrame:
-    """Staged plan: (1) lower/line-split once (multi-referenced, so
-    CollapseProject keeps them materialized), (2) per-doc counts as
-    codegen'd regexp scans, (3) cheap ratios + language argmax,
-    (4) flag comparisons. The whole battery reads each document a
-    bounded number of times with no per-rule token-array allocation
-    (~6x over the naive per-rule form; see rules.stat_exprs_counts)."""
-    cfg = cfg or RuleConfig()
-    helpers, counts, ratios, flags = _battery_exprs(cfg, text_col)
-    d = df.withColumns(dict(helpers))
-    d = d.withColumns(dict(counts))
-    d = d.withColumns(dict(ratios))
-    # derive the drop list from the stat dicts (rules.py owns the
-    # names): a new stat added there must not silently leak an
-    # underscore helper column into every scored output / sink schema
-    helper_cols = [
-        "_lower",
-        "_lines",
-        *(k for k, _ in counts),
-        *(k for k, _ in ratios),
-    ]
-    return d.withColumns(dict(flags)).drop(*helper_cols)
-
+_STATS = "_rule_stats"
 
 # keep's OR-chain evaluation order: cheapest rules first so codegen's
-# short-circuit skips the expensive wordlist/langid scans for any doc
-# already dropped by a length/word-count gate. Evaluation order only —
-# fired_rules stays in RULE_NAMES order (pinned by the oracles).
-# Measured 13.7s -> 7.0s for filter(keep) over 800k docs.
+# short-circuit skips the battery for any doc already dropped by a
+# length gate. Evaluation order only — fired_rules stays in RULE_NAMES
+# order (pinned by the oracles). Measured 13.7s -> 7.0s for
+# filter(keep) over 800k docs.
 _KEEP_EVAL_ORDER = (
     "empty", "too_short", "too_long", "too_few_words", "too_many_words",
     "mean_word_len", "high_symbol", "high_repetition", "dup_lines",
     "low_stopword", "toxicity", "lang",
 )
+assert set(_KEEP_EVAL_ORDER) == set(RULE_NAMES)
 
 
-@lru_cache(maxsize=1)
-def _fired_and_or():
-    """Cached (fired_rules array, flag OR-chain) Columns — pure
-    functions of the fixed RULE_NAMES/_KEEP_EVAL_ORDER constants
-    (round-7 construction-cost rule, see _battery_exprs)."""
-    names = list(RULE_NAMES)
-    assert set(_KEEP_EVAL_ORDER) == set(names)
+@lru_cache(maxsize=32)
+def _verdict_exprs(
+    cfg: RuleConfig, text_col: str, lang_fires: Column | None = None
+) -> tuple[Column, dict[str, Column], Column, Column]:
+    """(stats, rule_* columns, fired_rules, keep) for one config.
+
+    keep reads the stats through a bind_once of the ``_rule_stats``
+    column, not through the rule_* columns: a ``filter(keep)``-only
+    consumer prunes the flags and has the stats substituted into its
+    Filter condition, where the binding still evaluates them once per
+    row. The three cheap gates stay plain predicates ahead of it, so
+    docs they drop never run the battery.
+
+    Cached: building these trees costs ~0.3 s of py4j round-trips,
+    billed to every score_pages call. Column trees are reusable across
+    DataFrames and sessions, but they hold references into the JVM
+    gateway: a process that restarts the gateway must call
+    ``_verdict_exprs.cache_clear()``. A ``lang_fires`` override is an
+    unhashable Column, so with_verdict builds those uncached."""
+    flags = rule_flags(cfg, text_col, F.col(_STATS), lang_fires)
+    # the cheap gates are null-safe but typed nullable; the coalesce
+    # keeps every rule_* column non-nullable in the scored schema
+    cols = {
+        f"{RULE_PREFIX}{n}": F.coalesce(e, F.lit(False))
+        for n, e in flags.items()
+    }
     fired = F.array_compact(
         F.array(
-            *[
-                F.when(F.col(f"{RULE_PREFIX}{n}"), F.lit(n))
-                for n in names
-            ]
+            *[F.when(F.col(RULE_PREFIX + n), F.lit(n)) for n in RULE_NAMES]
         )
     )
-    flag_or = F.lit(False)
-    for n in _KEEP_EVAL_ORDER:
-        flag_or = flag_or | F.col(f"{RULE_PREFIX}{n}")
-    return fired, flag_or
+    cheap, rest = _KEEP_EVAL_ORDER[:3], _KEEP_EVAL_ORDER[3:]
+
+    def _rest_fired(s: Column) -> Column:
+        f = rule_flags(cfg, text_col, s, lang_fires)
+        return reduce(or_, (f[n] for n in rest))
+
+    any_fired = reduce(or_, (flags[n] for n in cheap)) | F.coalesce(
+        bind_once(F.col(_STATS), _rest_fired), F.lit(False)
+    )
+    return rule_stats(cfg, text_col), cols, fired, ~any_fired
 
 
 def with_verdict(
     df: DataFrame,
     cfg: RuleConfig | None = None,
     text_col: str = "text",
+    lang_fires: Column | None = None,
     self_contained_keep: bool = False,
 ) -> DataFrame:
-    """Adds fired_rules (array<string>, rule order) and keep (bool).
+    """Adds the rule_* flags, fired_rules (array<string>, RULE_NAMES
+    order) and keep (bool).
 
-    keep is a short-circuiting OR-chain over the flags rather than
-    size(fired_rules) == 0 (same value: flags are coalesced non-null):
-    a consumer that filters on keep without reading fired_rules gets
-    the array construction pruned AND early-out evaluation.
-
-    ``self_contained_keep`` (round-7) builds keep from
-    rules.keep_fired_expr instead of the flag columns: one expression
-    whose stats are HOF let-bindings, so a filter(keep)-only consumer
-    — where the optimizer substitutes the whole battery into a Filter
-    condition that has no common-subexpression elimination — pays each
-    stat scan once per row instead of once per referencing flag
-    (measured 6.1 s -> 0.1 s battery per 800k docs). Same value as the
-    flag OR (pinned by test + the F1 golden gate). ONLY valid when no
-    rule_* column has been overridden after with_rule_flags (e.g. the
-    langid-UDF pipeline branch must keep the column form)."""
+    ``lang_fires`` overrides the language rule (both rule_lang and
+    keep follow it); the langid-UDF pipeline branch passes the model's
+    verdict. ``self_contained_keep`` is accepted and ignored — keep
+    always has the bound form; the parameter stays only because
+    perfbench/trace_run.py passes it."""
     cfg = cfg or RuleConfig()
-    fired, flag_or = _fired_and_or()
-    if self_contained_keep:
-        from data_quality_checker_spark.plans.rules import (
-            keep_fired_expr,
-        )
-
-        any_fired = keep_fired_expr(cfg, text_col)
-    else:
-        any_fired = flag_or
-    return df.withColumn("fired_rules", fired).withColumn(
-        "keep", ~any_fired
+    build = _verdict_exprs
+    if lang_fires is not None:
+        build = _verdict_exprs.__wrapped__
+    stats, flags, fired, keep = build(cfg, text_col, lang_fires)
+    return (
+        df.withColumn(_STATS, stats)
+        .withColumns(flags)
+        .withColumns({"fired_rules": fired, "keep": keep})
+        .drop(_STATS)
     )
+
+
+def with_rule_flags(
+    df: DataFrame, cfg: RuleConfig | None = None, text_col: str = "text"
+) -> DataFrame:
+    """Adds only the 12 rule_* flag columns."""
+    return with_verdict(df, cfg, text_col).drop("fired_rules", "keep")

@@ -246,10 +246,17 @@ def test_pipeline_with_trained_langid_artifact(spark, artifact, model):
     # fail loudly on fixture drift rather than silently skipping
     ambiguous = "this time el mundo would la make de"
     gib = "zqx vprw qqj zzk xq"
+    # long enough to pass every other rule; the model labels it 'en'
+    # in the same low bin as ``ambiguous`` while the stopword argmax
+    # says 'es', so only the UDF override decides its keep
+    mixed = (
+        "time de el today la make the mundo de and el la this would"
+        " make de make el people"
+    )
     ts = dt.datetime(2024, 3, 1)
     rows = [
         (f"https://h.ex/{i}", ts, b"<html/>", t, "en")
-        for i, t in enumerate((en, es, ambiguous, gib))
+        for i, t in enumerate((en, es, ambiguous, gib, mixed))
     ]
     pages = spark.createDataFrame(
         rows, "url string, warc_ts timestamp, html binary, text string, lang string"
@@ -262,7 +269,10 @@ def test_pipeline_with_trained_langid_artifact(spark, artifact, model):
     got = {
         r["url"]: r
         for r in score_pages(pages, cfg)
-        .select("url", "text", "lang_detected", "lang_confidence", "rule_lang")
+        .select(
+            "url", "text", "lang_detected", "lang_confidence", "rule_lang",
+            "fired_rules", "keep",
+        )
         .collect()
     }
     for u, r in got.items():
@@ -274,6 +284,9 @@ def test_pipeline_with_trained_langid_artifact(spark, artifact, model):
     assert got["https://h.ex/0"]["lang_detected"] == "en"
     assert got["https://h.ex/1"]["lang_detected"] == "es"
     assert got["https://h.ex/3"]["lang_detected"] == "und"
+    # keep follows the model's label, not the stopword argmax
+    assert got["https://h.ex/4"]["fired_rules"] == []
+    assert got["https://h.ex/4"]["keep"] is True
 
     # confidence reject: a threshold above the ambiguous doc's
     # calibrated confidence fires its lang rule; clear English with
@@ -302,10 +315,17 @@ def test_pipeline_with_trained_langid_artifact(spark, artifact, model):
         langid_min_confidence=thresh,
     )
     got2 = {
-        r["url"]: r["rule_lang"]
+        r["url"]: r
         for r in score_pages(pages, cfg2)
-        .select("url", "rule_lang")
+        .select("url", "rule_lang", "fired_rules", "keep")
         .collect()
     }
-    assert got2["https://h.ex/2"] is True
-    assert got2["https://h.ex/0"] is False
+    assert got2["https://h.ex/2"]["rule_lang"] is True
+    assert got2["https://h.ex/0"]["rule_lang"] is False
+    # fired_rules and keep read the same lang override as rule_lang:
+    # the low-confidence reject alone drops the otherwise-kept doc
+    for u, r in got2.items():
+        assert ("lang" in r["fired_rules"]) is r["rule_lang"], u
+    assert got2["https://h.ex/4"]["rule_lang"] is True
+    assert got2["https://h.ex/4"]["fired_rules"] == ["lang"]
+    assert got2["https://h.ex/4"]["keep"] is False

@@ -206,10 +206,30 @@ def test_rule_names_static_tuple_in_sync(spark):
     from data_quality_checker_spark.plans.rules import (
         RULE_NAMES,
         RuleConfig,
-        rule_exprs,
+        rule_flags,
+        rule_stats,
     )
 
-    assert tuple(rule_exprs(RuleConfig()).keys()) == RULE_NAMES
+    cfg = RuleConfig()
+    flags = rule_flags(cfg, "text", rule_stats(cfg))
+    assert tuple(flags.keys()) == RULE_NAMES
+
+
+def test_score_pages_plan_runs_battery_once(spark):
+    """One bound rule battery: the executed plan lowercases the text
+    and runs the fused wordlist extraction exactly once, both when
+    every column is read and when only filter(keep) is (where the
+    battery is substituted into the Filter condition). Uncached input:
+    a cached scored frame would be read back, not planned."""
+    from data_quality_checker_spark.plans.rules import _wordset_fold_sql
+
+    cfg = PipelineConfig()
+    _, fused = _wordset_fold_sql(cfg.rules.stopwords, cfg.rules.toxic_words)
+    scored = score_pages(synth.pages_df(spark, 20, seed=3), cfg)
+    for df in (scored, scored.filter("keep").select("url")):
+        plan = df._jdf.queryExecution().executedPlan().toString()
+        got = (plan.count("lower(text"), plan.count(fused))
+        assert got == (1, 1), got
 
 
 def test_host_metrics_salted_equals_direct(spark, pages, scored):

@@ -21,10 +21,7 @@ from hypothesis import strategies as st
 from data_quality_checker_spark.plans import oracle as O
 from data_quality_checker_spark.plans.rules import RuleConfig
 from data_quality_checker_spark.plans.scrub import scrub_python
-from data_quality_checker_spark.plans.verdict import (
-    with_rule_flags,
-    with_verdict,
-)
+from data_quality_checker_spark.plans.verdict import with_verdict
 from data_quality_checker_spark.plans.scrub import with_scrub
 
 _ALPHABET = (
@@ -67,7 +64,7 @@ def test_verdict_matches_python_oracle(spark, texts):
     )
     got = {
         r["id"]: (r["keep"], list(r["fired_rules"]))
-        for r in with_verdict(with_rule_flags(df, cfg), cfg)
+        for r in with_verdict(df, cfg)
         .select("id", "keep", "fired_rules")
         .collect()
     }

@@ -16,7 +16,9 @@ from data_quality_checker_spark.functions.wordlists import (
     TOXIC_WORDS,
 )
 from data_quality_checker_spark.plans.rules import (
-    lang_argmax_expr,
+    RuleConfig,
+    _lang_argmax_from_counts,
+    rule_stats,
     word_alt_pattern,
 )
 
@@ -76,9 +78,9 @@ def test_trie_pattern_counts_match_flat_alternation(docs):
 
 
 def test_lang_argmax_matches_five_scan_form(docs):
-    """lang_argmax_expr (one union extraction + membership fold) must
-    label every row exactly like the five-regexp-scan argmax it
-    replaced."""
+    """The argmax over rule_stats' 7-wide fused wordlist fold (one
+    extraction + membership fold) must label every row exactly like
+    the five-regexp-scan argmax it replaced."""
     lower = F.lower("text")
     scores = {
         lang: F.regexp_count(
@@ -96,7 +98,9 @@ def test_lang_argmax_matches_five_scan_form(docs):
         docs.filter("text is not null")
         .select(
             "doc_id",
-            lang_argmax_expr(lower).alias("opt"),
+            _lang_argmax_from_counts(rule_stats(RuleConfig())["wsc"]).alias(
+                "opt"
+            ),
             ref.alias("ref"),
         )
         .collect()
@@ -179,61 +183,104 @@ def test_duplicate_clusters_prev_label_convergence(spark):
     release_cache(out)
 
 
-def test_keep_fired_expr_matches_flag_or(spark):
-    """The self-contained bound keep (rules.keep_fired_expr, used by
-    score_pages' filter path) must equal the flag-column OR for every
-    edge shape: NULL/empty/whitespace text, length gates, multi-lang,
-    unicode lowercasing that changes length, dup lines, toxicity."""
-    from pyspark.sql import functions as F
+def _assert_verdict_matches_oracle(spark, texts, cfg):
+    """Every rule_* flag, fired_rules and keep from with_verdict must
+    equal plans/oracle.fired_rules row for row, in the all-columns
+    shape and in the filter(keep)-only shape (where the optimizer
+    substitutes the bound battery into the Filter condition)."""
+    from data_quality_checker_spark.plans import oracle as O
+    from data_quality_checker_spark.plans.rules import RULE_NAMES
+    from data_quality_checker_spark.plans.verdict import with_verdict
 
-    from data_quality_checker_spark.plans.rules import (
-        RuleConfig,
-        keep_fired_expr,
+    df = spark.createDataFrame(
+        list(enumerate(texts)), "doc_id long, text string"
     )
-    from data_quality_checker_spark.plans.verdict import (
-        with_rule_flags,
-        with_verdict,
-    )
+    scored = with_verdict(df, cfg)
+    flags = [f"rule_{n}" for n in RULE_NAMES]
+    got = {
+        r["doc_id"]: r
+        for r in scored.select(
+            "doc_id", *flags, "fired_rules", "keep"
+        ).collect()
+    }
+    kept = {
+        r["doc_id"] for r in scored.filter("keep").select("doc_id").collect()
+    }
+    for i, t in enumerate(texts):
+        want = O.fired_rules(t, cfg)
+        r = got[i]
+        assert [n for n in RULE_NAMES if r[f"rule_{n}"]] == want, (i, t)
+        assert all(r[f] is not None for f in flags), (i, t)
+        assert list(r["fired_rules"]) == want, (i, t)
+        assert r["keep"] is (not want), (i, t)
+        assert (i in kept) is (not want), (i, t)
+    return got
 
-    rows = [
-        (None,), ("",), ("   ",), ("\t\n",), ("ab",), ("x" * 90000,),
-        ("İstanbul BİR İKİ word here today maybe",),
-        ("the cat and the dog sat on the mat with the hat",),
-        ("el gato y el perro es bueno para la casa y la vida",),
-        ("le chat et le chien est dans la maison aujourd'hui",),
-        ("zzz qqq ppp mmm nnn",), ("a a a a a a a a a a a a",),
-        ("line one\nline one\nline one\nline two",),
-        ("!!!! @@@@ #### $$$$ %%%%",),
-        ("  leading ws then the words of the doc here  ",),
-        ("the quick brown fox damn jumps over the lazy dog today",),
-        ("word " * 30000,), ("short words only here now then",),
+
+def test_verdict_matches_oracle_edge_rows(spark):
+    """Edge shapes for the bound battery: NULL/empty/whitespace text,
+    length gates, unicode lowercasing that changes length (U+0130),
+    multi-language, dup lines, symbols, toxicity. The long rows pass
+    the three cheap gates, so the battery itself decides them."""
+    pad = " the people would make time for this year and day with them"
+    texts = [
+        None, "", "   ", "\t\n", "ab", "x" * 90000,
+        "İstanbul BİR İKİ word here today maybe",
+        "İstanbul BİR İKİ word here today maybe and the" + pad,
+        "the cat and the dog sat on the mat with the hat",
+        "the cat and the dog sat on the mat with the hat" + pad,
+        "el gato y el perro es bueno para la casa y la vida",
+        "el gato y el perro es bueno para la casa y la vida con el"
+        " mundo de los años y el tiempo para todos",
+        "le chat et le chien est dans la maison aujourd'hui",
+        "der hund und die katze sind nicht in dem haus und sie"
+        " sind mit der familie für das jahr",
+        "zzz qqq ppp mmm nnn",
+        "a a a a a a a a a a a a",
+        "a a a a a a a a a a a a a a a a a a a a a a a a a a a a a a"
+        " a a a a a a a a a a a a",
+        "line one\nline one\nline one\nline two",
+        "line one of the doc\n" * 4 + "line two of the doc" + pad,
+        "!!!! @@@@ #### $$$$ %%%%",
+        "!!!! @@@@ #### $$$$ %%%% the" + pad,
+        "  leading ws then the words of the doc here  ",
+        "the quick brown fox damn jumps over the lazy dog today",
+        "word " * 30000,
+        "short words only here now then",
+        "the quick brown fox toxic_slur_a jumps over the dog" + pad,
+        "the" + pad + pad,
     ]
-    df = spark.createDataFrame(rows, "text string").withColumn(
-        "doc_id", F.monotonically_increasing_id()
+    got = _assert_verdict_matches_oracle(spark, texts, RuleConfig())
+    # the fixture exercises both verdicts past the cheap gates
+    assert got[len(texts) - 2]["fired_rules"] == ["toxicity"]
+    assert got[len(texts) - 1]["keep"]
+
+
+def test_verdict_matches_oracle_custom_config(spark):
+    """The fused-extraction membership map is cached per
+    (stopwords, toxic_words): a CUSTOM RuleConfig must build its own
+    map and still match the oracle on every flag."""
+    cfg = RuleConfig(
+        stopwords=("lorem", "ipsum", "dolor"),
+        toxic_words=("badword", "awful"),
+        min_stopword_ratio=0.05,
+        allowed_langs=("en", "es"),
     )
-    cfg = RuleConfig()
-    a = with_verdict(with_rule_flags(df), cfg).select("doc_id", "keep")
-    b = df.select(
-        "doc_id", (~keep_fired_expr(cfg)).alias("keep")
-    )
-    mism = (
-        a.alias("a")
-        .join(b.alias("b"), "doc_id")
-        .filter("a.keep <> b.keep")
-        .count()
-    )
-    assert mism == 0
-    # and the self_contained_keep=True verdict path agrees too
-    c = with_verdict(
-        with_rule_flags(df), cfg, self_contained_keep=True
-    ).select("doc_id", F.col("keep").alias("keep_sc"))
-    mism2 = (
-        a.alias("a")
-        .join(c.alias("c"), "doc_id")
-        .filter("a.keep <> c.keep_sc")
-        .count()
-    )
-    assert mism2 == 0
+    texts = [
+        "lorem ipsum dolor sit amet lorem ipsum here we go now",
+        "lorem ipsum dolor sit amet lorem ipsum here we go now and"
+        " the people would make time for this year",
+        "badword in the middle of the otherwise fine text here",
+        "badword in the middle of the otherwise fine lorem text here"
+        " and the people would make time for this",
+        "no stop words at all in this particular document text",
+        "el gato y el perro es bueno para la casa y la vida",
+        "el gato y el perro es bueno para la casa y la vida con el"
+        " mundo de lorem ipsum y el tiempo",
+        None, "",
+    ]
+    got = _assert_verdict_matches_oracle(spark, texts, cfg)
+    assert got[6]["keep"]  # 'es' allowed, enough custom stopwords
 
 
 # ---------------------------------------------------------------------------
@@ -333,47 +380,3 @@ def test_rollback_skips_committed_legacy_prefix_batch(spark, tmp_path):
         assert os.path.exists(
             f"{root}/{table}/batch-2024-part-1-part-0"
         ), table
-
-
-def test_keep_fired_expr_custom_config(spark):
-    """The fused-extraction membership map is cached per
-    (stopwords, toxic_words) — a CUSTOM RuleConfig must produce its
-    own map and still match the flag-column OR exactly."""
-    from pyspark.sql import functions as F
-
-    from data_quality_checker_spark.plans.rules import (
-        RuleConfig,
-        keep_fired_expr,
-    )
-    from data_quality_checker_spark.plans.verdict import (
-        with_rule_flags,
-        with_verdict,
-    )
-
-    cfg = RuleConfig(
-        stopwords=("lorem", "ipsum", "dolor"),
-        toxic_words=("badword", "awful"),
-        min_stopword_ratio=0.05,
-        allowed_langs=("en", "es"),
-    )
-    rows = [
-        ("lorem ipsum dolor sit amet lorem ipsum here we go now",),
-        ("badword in the middle of the otherwise fine text here",),
-        ("no stop words at all in this particular document text",),
-        ("el gato y el perro es bueno para la casa y la vida",),
-        (None,), ("",),
-    ]
-    df = spark.createDataFrame(rows, "text string").withColumn(
-        "doc_id", F.monotonically_increasing_id()
-    )
-    a = with_verdict(with_rule_flags(df, cfg), cfg).select(
-        "doc_id", "keep"
-    )
-    b = df.select("doc_id", (~keep_fired_expr(cfg)).alias("keep"))
-    mism = (
-        a.alias("a")
-        .join(b.alias("b"), "doc_id")
-        .filter("a.keep <> b.keep")
-        .count()
-    )
-    assert mism == 0

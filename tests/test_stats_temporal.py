@@ -62,6 +62,16 @@ def test_psi_zero_for_identical_and_positive_for_shifted(spark, num_df):
     assert S.psi(num_df, shifted, "x") > 0.2
 
 
+def test_psi_zero_when_one_side_all_null(spark):
+    """One side empty after the NULL filter has no distribution to
+    compare: psi returns 0.0 like the both-empty case, either way
+    round, instead of dividing by a zero count."""
+    nulls = spark.createDataFrame([(None,), (None,)], "x double")
+    vals = spark.createDataFrame([(1.0,), (2.0,), (5.0,)], "x double")
+    assert S.psi(nulls, vals, "x") == 0.0
+    assert S.psi(vals, nulls, "x") == 0.0
+
+
 def test_mutual_information_and_chi2(spark):
     # perfectly dependent pair
     df = spark.createDataFrame(
